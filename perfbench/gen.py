@@ -1,21 +1,17 @@
-"""Input generator for the benchmark.
+"""Inputs of the benchmark.
 
-Two kinds of input:
-
-- ``write_base``: the ten synthetic tables the registry reads (TPC-H-ish
-  star schema plus ``events``, ``documents`` and ``embeddings``), in the
-  same parquet shapes as the project's sf test data: same column names,
-  same arrow types, same value domains. A fixed generator seed makes them
-  identical in every checkout, so the expected outputs of the registry
-  rows can be pinned in ``expected/``.
+- ``BASE``: the project's sf0.01 test tables (the ten TPC-H-ish star
+  schema, ``events``, ``documents`` and ``embeddings`` tables of
+  ``TESTDATA.md``, Seed=42), copied unchanged into ``perfbench/data``. The
+  registry rows read them as they are, so their expected outputs can be
+  pinned in ``expected/``.
 - ``write_replica``: the ETL workload's input, ``factor`` copies of the
   base ``events`` and ``customer`` with disjoint per-copy key offsets on
   ``event_id``, ``user_id`` and ``c_custkey`` (the ``graft.Sweep``
   scheme). The benchmark seed decides which copy is shifted by how many
   whole days, so different seeds give each member a different calendar.
-
-Both write under a marker file that records their parameters; a directory
-whose marker matches is reused as it is.
+  It is written under a marker file that records its parameters; a
+  directory whose marker matches is reused as it is.
 """
 import json
 import os
@@ -23,18 +19,13 @@ import shutil
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
-BASE_SEED = 42
+BASE = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data", "sf0.01")
 # Sweep.scaleTable's copy offset: keys of different copies never collide.
 KEY_OFFSET = 1 << 25
 MARKER = "_PERFBENCH_META"
-
-VOCAB = ("join hash row batch scan column customer filter small slow merge "
-         "order vector line table data agg value key stream window a spark "
-         "part group big sort query fast the").split()
-ADJ = "small red blue hot old large new cold".split()
-NOUN = "ring widget bolt gear gizmo plate anvil spring".split()
 
 
 def _marker_ok(path, meta):
@@ -51,145 +42,6 @@ def _publish(tmp, path, meta):
         json.dump(meta, f)
     shutil.rmtree(path, ignore_errors=True)
     os.rename(tmp, path)
-
-
-def _write(dirpath, name, cols):
-    pq.write_table(pa.table(cols), os.path.join(dirpath, f"{name}.parquet"))
-
-
-def _days(rng, n, start, end):
-    lo = np.datetime64(start, "D").astype(np.int64)
-    hi = np.datetime64(end, "D").astype(np.int64)
-    d = rng.integers(lo, hi + 1, n).astype("datetime64[D]")
-    return pa.array(d.astype("datetime64[us]"), pa.timestamp("us"))
-
-
-def _money(rng, n, lo, hi):
-    return np.round(rng.uniform(lo, hi, n), 2)
-
-
-def sizes(sf):
-    """Row counts per table at scale factor ``sf`` (sf0.01 matches the
-    project's sf0.01 test data table by table)."""
-    return {
-        "customer": int(round(150_000 * sf)),
-        "supplier": max(10, int(round(10_000 * sf))),
-        "part": int(round(200_000 * sf)),
-        "orders": int(round(1_500_000 * sf)),
-        "lineitem": int(round(6_000_000 * sf)),
-        "events": int(round(1_000_000 * sf)),
-        "users": max(10, int(round(15_000 * sf))),
-        "documents": max(500, int(round(50_000 * sf))),
-        "embeddings": max(500, int(round(20_000 * sf))),
-    }
-
-
-def write_base(path, sf):
-    """Writes the ten base tables at scale ``sf`` into ``path``."""
-    meta = {"kind": "base", "sf": sf, "seed": BASE_SEED, "version": 1}
-    if _marker_ok(path, meta):
-        return False
-    tmp = path + ".tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
-    os.makedirs(tmp)
-    rng = np.random.default_rng(BASE_SEED)
-    n = sizes(sf)
-
-    _write(tmp, "region", {
-        "r_regionkey": pa.array(range(5), pa.int32()),
-        "r_name": ["AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST"]})
-    _write(tmp, "nation", {
-        "n_nationkey": pa.array(range(25), pa.int32()),
-        "n_name": [f"NATION_{i}" for i in range(25)],
-        "n_regionkey": pa.array([i % 5 for i in range(25)], pa.int32())})
-
-    c = n["customer"]
-    _write(tmp, "customer", {
-        "c_custkey": pa.array(np.arange(c), pa.int64()),
-        "c_name": [f"Customer#{i:09d}" for i in range(c)],
-        "c_nationkey": pa.array(rng.integers(0, 25, c), pa.int32()),
-        "c_acctbal": _money(rng, c, -999.99, 9999.99),
-        "c_mktsegment": rng.choice(
-            ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"], c)})
-
-    s = n["supplier"]
-    _write(tmp, "supplier", {
-        "s_suppkey": pa.array(np.arange(s), pa.int64()),
-        "s_name": [f"Supplier#{i:09d}" for i in range(s)],
-        "s_nationkey": pa.array(rng.integers(0, 25, s), pa.int32()),
-        "s_acctbal": _money(rng, s, -999.99, 9999.99)})
-
-    p = n["part"]
-    _write(tmp, "part", {
-        "p_partkey": pa.array(np.arange(p), pa.int64()),
-        "p_name": [f"{a} {b}" for a, b in zip(rng.choice(ADJ, p), rng.choice(NOUN, p))],
-        "p_brand": [f"Brand#{i}" for i in rng.integers(1, 26, p)],
-        "p_type": rng.choice(["ECONOMY", "LARGE", "MEDIUM", "PROMO", "SMALL", "STANDARD"], p),
-        "p_size": pa.array(rng.integers(1, 51, p), pa.int32()),
-        "p_retailprice": np.round(900.0 + (np.arange(p) % 1000) * 0.1, 1)})
-
-    o = n["orders"]
-    _write(tmp, "orders", {
-        "o_orderkey": pa.array(np.arange(o), pa.int64()),
-        "o_custkey": pa.array(rng.integers(0, c, o), pa.int64()),
-        "o_orderstatus": rng.choice(["F", "O", "P"], o),
-        "o_totalprice": _money(rng, o, 1000.0, 500000.0),
-        "o_orderdate": _days(rng, o, "1995-01-01", "2001-08-01"),
-        "o_orderpriority": rng.choice(
-            ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"], o)})
-
-    li = n["lineitem"]
-    _write(tmp, "lineitem", {
-        "l_orderkey": pa.array(rng.integers(0, o, li), pa.int64()),
-        "l_partkey": pa.array(rng.integers(0, p, li), pa.int64()),
-        "l_suppkey": pa.array(rng.integers(0, s, li), pa.int64()),
-        "l_linenumber": pa.array(rng.integers(1, 8, li), pa.int32()),
-        "l_quantity": rng.integers(1, 51, li).astype(np.float64),
-        "l_extendedprice": _money(rng, li, 900.0, 105000.0),
-        "l_discount": rng.integers(0, 11, li) / 100.0,
-        "l_tax": rng.integers(0, 9, li) / 100.0,
-        "l_returnflag": rng.choice(["A", "N", "R"], li),
-        "l_linestatus": rng.choice(["F", "O"], li),
-        "l_shipdate": _days(rng, li, "1995-01-02", "2001-11-04")})
-
-    e = n["events"]
-    start_us = np.datetime64("2024-01-01T00:00:00", "us").astype(np.int64)
-    span_us = 30 * 86_400 * 1_000_000
-    ts = np.sort(rng.integers(0, span_us, e)) + start_us
-    _write(tmp, "events", {
-        "event_id": pa.array(np.arange(e), pa.int64()),
-        "ts": pa.array(ts.astype("datetime64[us]"), pa.timestamp("us")),
-        "user_id": pa.array(rng.integers(0, n["users"], e), pa.int64()),
-        "event_type": rng.choice(["click", "error", "purchase", "signup", "view"], e),
-        "value": np.maximum(0.01, np.round(rng.exponential(50.0, e), 2)),
-        "props": [f'{{"k": {k}}}' for k in rng.integers(0, 100, e)]})
-
-    d = n["documents"]
-    texts = [" ".join(rng.choice(VOCAB, int(k))) for k in rng.integers(10, 100, d)]
-    # ~5% near-duplicates: another document's text plus one marker word
-    for i in rng.choice(d, d // 20, replace=False):
-        texts[i] = texts[int(rng.integers(0, d))] + " dup"
-    langs = rng.choice(["en", "en", "en", "de", "es", "fr", "zh"], d)
-    _write(tmp, "documents", {
-        "doc_id": pa.array(np.arange(d), pa.int64()),
-        "text": texts,
-        "lang": langs,
-        "source": [f"src{i % 20}" for i in range(d)],
-        "n_chars": pa.array([len(t) for t in texts], pa.int64())})
-
-    m = n["embeddings"]
-    centers = rng.standard_normal((10, 64))
-    centers /= np.linalg.norm(centers, axis=1, keepdims=True)
-    labels = rng.integers(0, 10, m)
-    vecs = centers[labels] * 1.2 + rng.standard_normal((m, 64))
-    vecs /= np.linalg.norm(vecs, axis=1, keepdims=True)
-    _write(tmp, "embeddings", {
-        "vec_id": pa.array(np.arange(m), pa.int64()),
-        "embedding": pa.array(list(vecs.astype(np.float32)), pa.list_(pa.float32())),
-        "label": pa.array(labels, pa.int32())})
-
-    _publish(tmp, path, meta)
-    return True
 
 
 def write_replica(base, path, factor, seed):
@@ -210,13 +62,18 @@ def write_replica(base, path, factor, seed):
     for name in ("events", "customer"):
         os.makedirs(os.path.join(tmp, f"{name}.parquet"))
     day_us = 86_400 * 1_000_000
+    ts_col, id_col, user_col = (events.schema.get_field_index(c)
+                                for c in ("ts", "event_id", "user_id"))
+    key_col = customer.schema.get_field_index("c_custkey")
+    ts_us = pc.cast(events["ts"], pa.timestamp("us")).cast(pa.int64()).to_numpy()
     for k, shift in enumerate(shifts):
         off = k * KEY_OFFSET
-        ts = events["ts"].cast(pa.int64()).to_numpy() + shift * day_us
-        ev = events.set_column(0, "event_id", pa.array(events["event_id"].to_numpy() + off))
-        ev = ev.set_column(1, "ts", pa.array(ts.astype("datetime64[us]"), pa.timestamp("us")))
-        ev = ev.set_column(2, "user_id", pa.array(events["user_id"].to_numpy() + off))
-        cu = customer.set_column(0, "c_custkey", pa.array(customer["c_custkey"].to_numpy() + off))
+        ts = ts_us + shift * day_us
+        ev = events.set_column(id_col, "event_id", pa.array(events["event_id"].to_numpy() + off))
+        ev = ev.set_column(ts_col, "ts", pa.array(ts.astype("datetime64[us]"), pa.timestamp("us")))
+        ev = ev.set_column(user_col, "user_id", pa.array(events["user_id"].to_numpy() + off))
+        cu = customer.set_column(key_col, "c_custkey",
+                                 pa.array(customer["c_custkey"].to_numpy() + off))
         pq.write_table(ev, os.path.join(tmp, "events.parquet", f"part-{k:05d}.parquet"))
         pq.write_table(cu, os.path.join(tmp, "customer.parquet", f"part-{k:05d}.parquet"))
     meta["shifts_days"] = shifts

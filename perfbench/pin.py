@@ -4,7 +4,7 @@ Membership follows one rule: a registry name starting with ``q`` belongs
 to ``olap_rows``, every other name to ``curation_rows``. The rows of a
 workload are dealt into shards by warm time (``assign_shards``); the
 benchmark measures shard 0. Each row's expected output is the digest of
-its DuckDB oracle (``SparkEntry.oracleSql``) run on the generated input,
+its DuckDB oracle (``SparkEntry.oracleSql``) run on the sf0.01 test tables,
 or, for the rows without an oracle, the digest of the Spark output at the
 time of pinning. Rows whose Spark output disagrees with their oracle are
 printed; the oracle value is pinned.

@@ -4,7 +4,7 @@
     python3 perfbench/run.py --workload etl_dag --seed 1 --seconds 12 --trace 0
 
 Run from the repository root. It builds the library and the harness from
-source (``perfbench/build.py``), generates the inputs from the seed,
+source (``perfbench/build.py``), prepares the inputs from the seed,
 starts one JVM that sets up Spark, checks every operation's output, then
 measures whole runs of the workload for ``--seconds``. The last line of
 stdout is the result as JSON; ``--trace 1`` reports the per-layer metrics
@@ -32,11 +32,10 @@ import gen  # noqa: E402
 
 WORKLOADS = ("etl_dag", "curation_rows", "olap_rows")
 ROW_WORKLOADS = ("curation_rows", "olap_rows")
-# Scale of the registry rows' input, and of the base the ETL replica copies
-# ETL_FACTOR times: small enough that a run fits the per-run time budget.
-ROW_SF = 0.01
-ETL_SF = 0.005
-ETL_FACTOR = 10
+# Copies of the sf0.01 events and customer in the ETL replica: 50,000
+# events, so that set-up, the correctness pass, a warm-up and a timed run
+# fit the per-run time budget.
+ETL_FACTOR = 5
 # Oracle SQL per ETL operation; the DAG's written tables are checked too.
 ETL_ORACLES = {
     "audience_metrics": "q_audience_metrics",
@@ -56,10 +55,13 @@ DAG_STAGES = ("panel_windows", "raw_events", "weighted_events", "viewing_session
 # sample of about 4.5 s of pinned warm time, so that several passes fit in
 # one run.
 SHARDS = {"curation_rows": 12, "olap_rows": 16}
-# Untimed runs between the correctness pass and the timed runs, enough for
-# the JIT to settle: the first ETL runs after the correctness pass take
-# 1.2-1.4x the later ones, the first row pass about 1.2x.
-WARMUP_RUNS = {"etl_dag": 2, "curation_rows": 2, "olap_rows": 2}
+# Untimed runs between the correctness pass and the timed runs. Run times
+# keep falling for about 40 s after the correctness pass while the JIT
+# compiles; the timed runs start on the flatter part of that curve.
+WARMUP_RUNS = 2
+# Cold set-ups per invocation, each in a JVM of its own (the measuring JVM
+# included); setup_s is their median. Each costs about 11 s on 4 cores.
+SETUPS = 2
 EXIT_BUDGET_S = 175
 
 
@@ -87,6 +89,8 @@ def write_listing(work, expected):
 
 
 def run_harness(classes, workload, data, work, seed, seconds, trace, deadline, warm=0):
+    """Runs one harness JVM; returns what it wrote (``harness.json``, or
+    ``setup.json`` for a ``setup/<workload>`` run)."""
     cpus = os.cpu_count() or 1
     os.makedirs(os.path.join(work, "tmp"), exist_ok=True)
     cmd = ["java", *build.JVM_FLAGS, *build.JDK_OPENS,
@@ -109,7 +113,8 @@ def run_harness(classes, workload, data, work, seed, seconds, trace, deadline, w
         raise SystemExit(f"harness exited with {code}")
     if workload in ("registry", "membership"):
         return None
-    with open(os.path.join(work, "harness.json")) as f:
+    out = "setup.json" if workload.startswith("setup/") else "harness.json"
+    with open(os.path.join(work, out)) as f:
         return json.load(f)
 
 
@@ -161,10 +166,12 @@ def end_to_end(res):
     plain = [r for r in res["runs"] if not r["traced"]]
     walls = [op["wall_s"] for r in plain for op in r["ops"]]
     return {
-        "setup_s": (statistics.median(res["setup_s"]), "s"),
+        "setup_s": (statistics.median(res["setups_s"]), "s"),
         "run_s": (statistics.median(r["run_s"] for r in plain), "s"),
         "query_p50_s": (statistics.median(walls), "s"),
-        "query_p90_s": (statistics.quantiles(walls, n=10)[8], "s"),
+        # inclusive: interpolated between observed times, never beyond the
+        # slowest, so it only falls when an operation gets faster
+        "query_p90_s": (statistics.quantiles(walls, n=10, method="inclusive")[8], "s"),
         "peak_rss_mb": (res["peak_rss_mb"], "MB"),
     }, {"runs": len(plain), "op_samples": len(walls)}
 
@@ -209,7 +216,7 @@ def per_layer(res):
             med(lambda r: sum(op["materialized_bytes"] for op in r["ops"])), "bytes"),
         "sources.in_bytes": (med(lambda r: both(r, "in_bytes")), "bytes"),
         "sources.out_bytes": (med(lambda r: both(r, "out_bytes")), "bytes"),
-        "sources.resolve_ms": (statistics.median(res["resolve_ms"]), "ms"),
+        "sources.resolve_ms": (statistics.median(res["resolves_ms"]), "ms"),
     }
     for stage in DAG_STAGES:
         m[f"pipeline.{stage}_s"] = (med(lambda r: sum(
@@ -239,20 +246,18 @@ def repeat_against_previous(res, path):
 
 
 def prepare_inputs(bdir, workload, seed):
+    """The input directory of ``workload``: the sf0.01 tables for the row
+    workloads, the seed's replica (written on first use) for ``etl_dag``."""
+    if workload != "etl_dag":
+        return gen.BASE
     data_root = os.path.join(bdir, "data")
     os.makedirs(data_root, exist_ok=True)
-    if workload == "etl_dag":
-        base = os.path.join(data_root, f"base_sf{ETL_SF}")
-        gen.write_base(base, ETL_SF)
-        data = os.path.join(data_root, f"etl_x{ETL_FACTOR}_seed{seed}")
-        # keep only the replica of the current seed
-        for old in os.listdir(data_root):
-            if old.startswith("etl_x") and os.path.join(data_root, old) != data:
-                shutil.rmtree(os.path.join(data_root, old), ignore_errors=True)
-        gen.write_replica(base, data, ETL_FACTOR, seed)
-    else:
-        data = os.path.join(data_root, f"base_sf{ROW_SF}")
-        gen.write_base(data, ROW_SF)
+    data = os.path.join(data_root, f"etl_x{ETL_FACTOR}_seed{seed}")
+    # keep only the replica of the current seed
+    for old in os.listdir(data_root):
+        if old != os.path.basename(data):
+            shutil.rmtree(os.path.join(data_root, old), ignore_errors=True)
+    gen.write_replica(gen.BASE, data, ETL_FACTOR, seed)
     return data
 
 
@@ -262,13 +267,9 @@ def main():
     ap.add_argument("--seed", type=int, default=1)
     ap.add_argument("--seconds", type=float, default=12)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
-    ap.add_argument("--shard", type=int, default=0,
-                    help="which shard of a row workload to run (default 0, the benchmark's)")
-    ap.add_argument("--all-rows", action="store_true",
-                    help="run every row of a row workload instead of one shard (slow)")
     ap.add_argument("--pin", action="store_true", help="rewrite expected/*.json")
     args = ap.parse_args()
-    deadline = time.monotonic() + (3600 if args.all_rows else EXIT_BUDGET_S)
+    deadline = time.monotonic() + EXIT_BUDGET_S
     root = os.getcwd()
     if not os.path.isdir(os.path.join(root, "src", "main", "scala")):
         raise SystemExit("run from the repository root: src/main/scala is missing")
@@ -292,15 +293,18 @@ def main():
     shutil.rmtree(work, ignore_errors=True)
     os.makedirs(work)
     write_listing(work, expected)
-    if args.workload in ROW_WORKLOADS and not args.all_rows:
-        rows = expected[args.workload]
-        shard = args.shard
+    if args.workload in ROW_WORKLOADS:
         with open(os.path.join(work, "selected.txt"), "w") as f:
-            f.write("\n".join(sorted(n for n, r in rows.items() if r["shard"] == shard)))
-        print(f"shard {shard} of {args.workload}")
+            f.write("\n".join(sorted(
+                n for n, r in expected[args.workload].items() if r["shard"] == 0)))
     try:
+        # the extra cold set-ups run first, one JVM at a time
+        cold = [run_harness(classes, f"setup/{args.workload}", data, work, args.seed, 0, 0,
+                            deadline) for _ in range(SETUPS - 1)]
         res = run_harness(classes, args.workload, data, work, args.seed, args.seconds,
-                          args.trace, deadline, WARMUP_RUNS[args.workload])
+                          args.trace, deadline, WARMUP_RUNS)
+        res["setups_s"] = [c["setup_s"] for c in cold] + [res["setup_s"]]
+        res["resolves_ms"] = [c["resolve_ms"] for c in cold] + [res["resolve_ms"]]
         bad = check_outputs(res, args.workload, work, data,
                             expected.get(args.workload, {}))
     finally:
@@ -314,7 +318,7 @@ def main():
     with open(os.path.join(bdir, "results", f"{args.workload}-trace{args.trace}.json"), "w") as f:
         json.dump(res, f)
 
-    setups = ", ".join(f"{x:.2f}" for x in res["setup_s"])
+    setups = ", ".join(f"{x:.2f}" for x in res["setups_s"])
     warm = ", ".join(f"{r['run_s']:.2f}" for r in res["warm"])
     runs = ", ".join(f"{r['run_s']:.2f}" for r in res["runs"])
     log(f"setup {setups} s; check pass {res['check_s']:.1f} s; warm-up {warm} s; runs {runs} s")
@@ -343,7 +347,7 @@ def main():
     else:
         metrics, info = end_to_end(res)
         print(f"runs {info['runs']}, per-operation samples {info['op_samples']}, "
-              f"setup samples {len(res['setup_s'])}")
+              f"cold set-up samples {len(res['setups_s'])}")
     print(f"failed_ops {failed}/{attempted}")
     for name, (value, unit) in metrics.items():
         print(f"{name} {value:.6g} {unit}")

@@ -18,13 +18,17 @@ import graft.sources.ViewingData
   * which is run through `TaskDag.run` instead of a sink. */
 final case class Op(name: String, frame: (SparkSession, String) => DataFrame, dag: Boolean = false)
 
-/** The benchmark process. It sets up a local Spark session several
-  * times, runs every operation once with its output written as parquet
-  * for the correctness check (this pass is also the warm-up), then
-  * repeats full runs of the workload for the requested seconds with the
-  * output sent to the noop sink, and writes what it measured as JSON.
+/** The benchmark process. It sets up a local Spark session, runs every
+  * operation once with its output written as parquet for the correctness
+  * check (this pass is also the first warm-up), then repeats full runs of
+  * the workload for the requested seconds with the output sent to the
+  * noop sink, and writes what it measured as JSON.
   *
   *   Harness <workload> <dataDir> <workDir> <seed> <seconds> <trace 0|1> <cpus> <warm-up runs>
+  *
+  * With `setup/<workload>` as the workload it only sets up, writes the
+  * set-up time to `workDir/setup.json` and exits: one more cold set-up
+  * sample.
   *
   * `workDir/workloads.tsv` lists `name<TAB>workload` for the two
   * registry workloads; every registry name must be listed exactly once.
@@ -37,7 +41,6 @@ object Harness {
   val RowWorkloads = Seq("curation_rows", "olap_rows")
   val DagStages = Seq("panel_windows", "raw_events", "weighted_events", "viewing_sessions",
     "control_table")
-  val Setups = 3
 
   private val epochUs0 = System.currentTimeMillis() * 1000
   private val nano0 = System.nanoTime()
@@ -70,7 +73,9 @@ object Harness {
   }
 
   def main(args: Array[String]): Unit = {
-    val Array(workload, dataDir, work, seedArg, secondsArg, traceArg, cpus, warmArg) = args
+    val Array(mode, dataDir, work, seedArg, secondsArg, traceArg, cpus, warmArg) = args
+    val setupOnly = mode.startsWith("setup/")
+    val workload = mode.stripPrefix("setup/")
     val seed = seedArg.toLong
     val budget = secondsArg.toDouble
     val traced = traceArg == "1"
@@ -98,33 +103,28 @@ object Harness {
     }
     val inputs = if (workload == "etl_dag") Seq("events", "customer") else Tables
 
-    // --- set-up, several times; the last session stays open -----------
+    // --- set-up: from JVM start to a session that has resolved every
+    // input table and read one row --------------------------------------
     val jvmStartUs = ManagementFactory.getRuntimeMXBean.getStartTime * 1000
-    val setupS = mutable.ArrayBuffer.empty[Double]
-    val resolveMs = mutable.ArrayBuffer.empty[Double]
-    var spark: SparkSession = null
-    for (k <- 0 until Setups) {
-      if (spark != null) {
-        spark.stop()
-        SparkSession.clearActiveSession()
-        SparkSession.clearDefaultSession()
-      }
-      val t0 = System.nanoTime()
-      val startUs = if (k == 0) jvmStartUs else nowUs
-      spark = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.local.dir", s"$work/spark-local")
-        .config("spark.sql.warehouse.dir", s"$work/warehouse")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("ERROR")
-      val tr = System.nanoTime()
-      inputs.foreach(t => ViewingData.table(spark, dataDir, t).schema)
-      resolveMs += (System.nanoTime() - tr) / 1e6
-      ViewingData.table(spark, dataDir, "events").limit(1).collect()
-      setupS += (if (k == 0) (nowUs - startUs) / 1e6 else seconds(t0))
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.local.dir", s"$work/spark-local")
+      .config("spark.sql.warehouse.dir", s"$work/warehouse")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    val tr = System.nanoTime()
+    inputs.foreach(t => ViewingData.table(spark, dataDir, t).schema)
+    val resolveMs = (System.nanoTime() - tr) / 1e6
+    ViewingData.table(spark, dataDir, "events").limit(1).collect()
+    val setupS = (nowUs - jvmStartUs) / 1e6
+    if (setupOnly) {
+      Files.writeString(Paths.get(s"$work/setup.json"),
+        Json(Map("setup_s" -> setupS, "resolve_ms" -> resolveMs)))
+      spark.stop()
+      return
     }
     val sc = spark.sparkContext
     val tracer = if (traced) {
@@ -150,7 +150,7 @@ object Harness {
         if (op.dag) {
           val bad = TaskDag.run(spark, dagTasks((_, f) => f())).filterNot(_.ok)
           if (bad.nonEmpty) failures(op.name) = bad.map(r => s"${r.name}: ${r.error.getOrElse("")}").mkString("; ")
-        } else op.frame(spark, dataDir).coalesce(1).write.mode("overwrite").parquet(s"$work/check/${op.name}")
+        } else op.frame(spark, dataDir).write.mode("overwrite").parquet(s"$work/check/${op.name}")
       } catch {
         case e: Throwable => failures(op.name) = String.valueOf(e.getMessage).take(500)
       } finally freeBlocks()
@@ -275,7 +275,7 @@ object Harness {
     val out = Map[String, Any](
       "workload" -> workload, "seed" -> seed, "cpus" -> cpus.toInt,
       "ops" -> ops.map(_.name),
-      "setup_s" -> setupS.toSeq, "resolve_ms" -> resolveMs.toSeq,
+      "setup_s" -> setupS, "resolve_ms" -> resolveMs,
       "check_s" -> checkS, "check_failed" -> failures.toMap, "warm" -> warm,
       "measured_s" -> measuredS, "runs" -> runs.toSeq,
       "peak_rss_mb" -> hwmKb / 1024.0)

@@ -64,21 +64,33 @@ class InputTest(unittest.TestCase):
     def test_same_seed_same_replica(self):
         tmp = tempfile.mkdtemp()
         try:
-            base = os.path.join(tmp, "base")
-            gen.write_base(base, 0.001)
             digests = []
             for name in ("a", "b"):
-                gen.write_replica(base, os.path.join(tmp, name), 3, 5)
+                gen.write_replica(gen.BASE, os.path.join(tmp, name), 3, 5)
                 con = check.connect(os.path.join(tmp, name))
                 digests.append(check.digest(con, "SELECT * FROM events"))
-            gen.write_replica(base, os.path.join(tmp, "c"), 3, 6)
+            gen.write_replica(gen.BASE, os.path.join(tmp, "c"), 3, 6)
             other = check.digest(check.connect(os.path.join(tmp, "c")), "SELECT * FROM events")
             self.assertEqual(digests[0], digests[1])
             self.assertNotEqual(digests[0], other)
             self.assertEqual(gen.row_counts(os.path.join(tmp, "a")),
-                             {"customer": 3 * 150, "events": 3 * 1000})
+                             {"customer": 3 * 1500, "events": 3 * 10000})
         finally:
             shutil.rmtree(tmp)
+
+
+class QuantileTest(unittest.TestCase):
+    def test_p90_stays_within_the_sample(self):
+        def p90(walls):
+            res = {"runs": [{"traced": False, "run_s": sum(walls),
+                             "ops": [{"wall_s": w} for w in walls]}],
+                   "setups_s": [1.0], "peak_rss_mb": 1.0}
+            return run.end_to_end(res)[0]["query_p90_s"][0]
+
+        walls = [0.3, 0.4, 1.0, 1.2, 2.0, 3.0]
+        self.assertLessEqual(p90(walls), max(walls))
+        # a faster second-slowest operation never raises the p90
+        self.assertLess(p90([0.3, 0.4, 1.0, 1.2, 1.5, 3.0]), p90(walls))
 
 
 class DigestTest(unittest.TestCase):
