@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """The repository's benchmark: one command per workload run.
 
-    python3 perfbench/run.py --workload etl_dag --seed 1 --seconds 12 --trace 0
+    python3 perfbench/run.py --workload etl_dag --seed 1 --seconds 18 --trace 0
 
 Run from the repository root. It builds the library and the harness from
 source (``perfbench/build.py``), prepares the inputs from the seed,
@@ -59,9 +59,6 @@ SHARDS = {"curation_rows": 12, "olap_rows": 16}
 # keep falling for about 40 s after the correctness pass while the JIT
 # compiles; the timed runs start on the flatter part of that curve.
 WARMUP_RUNS = 2
-# Cold set-ups per invocation, each in a JVM of its own (the measuring JVM
-# included); setup_s is their median. Each costs about 11 s on 4 cores.
-SETUPS = 2
 EXIT_BUDGET_S = 175
 
 
@@ -89,8 +86,7 @@ def write_listing(work, expected):
 
 
 def run_harness(classes, workload, data, work, seed, seconds, trace, deadline, warm=0):
-    """Runs one harness JVM; returns what it wrote (``harness.json``, or
-    ``setup.json`` for a ``setup/<workload>`` run)."""
+    """Runs one harness JVM; returns what it wrote to ``harness.json``."""
     cpus = os.cpu_count() or 1
     os.makedirs(os.path.join(work, "tmp"), exist_ok=True)
     cmd = ["java", *build.JVM_FLAGS, *build.JDK_OPENS,
@@ -113,8 +109,7 @@ def run_harness(classes, workload, data, work, seed, seconds, trace, deadline, w
         raise SystemExit(f"harness exited with {code}")
     if workload in ("registry", "membership"):
         return None
-    out = "setup.json" if workload.startswith("setup/") else "harness.json"
-    with open(os.path.join(work, out)) as f:
+    with open(os.path.join(work, "harness.json")) as f:
         return json.load(f)
 
 
@@ -164,16 +159,19 @@ def check_outputs(res, workload, work, data, expected):
 
 def end_to_end(res):
     plain = [r for r in res["runs"] if not r["traced"]]
-    walls = [op["wall_s"] for r in plain for op in r["ops"]]
+    # one time per operation, its median over the timed runs, so the
+    # quantiles below do not move with the number of runs that fit
+    walls = [statistics.median(r["ops"][i]["wall_s"] for r in plain)
+             for i in range(len(plain[0]["ops"]))]
     return {
-        "setup_s": (statistics.median(res["setups_s"]), "s"),
+        "setup_s": (res["setup_s"], "s"),
         "run_s": (statistics.median(r["run_s"] for r in plain), "s"),
         "query_p50_s": (statistics.median(walls), "s"),
         # inclusive: interpolated between observed times, never beyond the
         # slowest, so it only falls when an operation gets faster
         "query_p90_s": (statistics.quantiles(walls, n=10, method="inclusive")[8], "s"),
         "peak_rss_mb": (res["peak_rss_mb"], "MB"),
-    }, {"runs": len(plain), "op_samples": len(walls)}
+    }, {"runs": len(plain), "ops": len(walls)}
 
 
 def counter_key(op):
@@ -216,7 +214,7 @@ def per_layer(res):
             med(lambda r: sum(op["materialized_bytes"] for op in r["ops"])), "bytes"),
         "sources.in_bytes": (med(lambda r: both(r, "in_bytes")), "bytes"),
         "sources.out_bytes": (med(lambda r: both(r, "out_bytes")), "bytes"),
-        "sources.resolve_ms": (statistics.median(res["resolves_ms"]), "ms"),
+        "sources.resolve_ms": (res["resolve_ms"], "ms"),
     }
     for stage in DAG_STAGES:
         m[f"pipeline.{stage}_s"] = (med(lambda r: sum(
@@ -265,7 +263,7 @@ def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("--workload", choices=WORKLOADS)
     ap.add_argument("--seed", type=int, default=1)
-    ap.add_argument("--seconds", type=float, default=12)
+    ap.add_argument("--seconds", type=float, default=18)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--pin", action="store_true", help="rewrite expected/*.json")
     args = ap.parse_args()
@@ -298,13 +296,8 @@ def main():
             f.write("\n".join(sorted(
                 n for n, r in expected[args.workload].items() if r["shard"] == 0)))
     try:
-        # the extra cold set-ups run first, one JVM at a time
-        cold = [run_harness(classes, f"setup/{args.workload}", data, work, args.seed, 0, 0,
-                            deadline) for _ in range(SETUPS - 1)]
         res = run_harness(classes, args.workload, data, work, args.seed, args.seconds,
                           args.trace, deadline, WARMUP_RUNS)
-        res["setups_s"] = [c["setup_s"] for c in cold] + [res["setup_s"]]
-        res["resolves_ms"] = [c["resolve_ms"] for c in cold] + [res["resolve_ms"]]
         bad = check_outputs(res, args.workload, work, data,
                             expected.get(args.workload, {}))
     finally:
@@ -318,10 +311,9 @@ def main():
     with open(os.path.join(bdir, "results", f"{args.workload}-trace{args.trace}.json"), "w") as f:
         json.dump(res, f)
 
-    setups = ", ".join(f"{x:.2f}" for x in res["setups_s"])
     warm = ", ".join(f"{r['run_s']:.2f}" for r in res["warm"])
     runs = ", ".join(f"{r['run_s']:.2f}" for r in res["runs"])
-    log(f"setup {setups} s; check pass {res['check_s']:.1f} s; warm-up {warm} s; runs {runs} s")
+    log(f"setup {res['setup_s']:.2f} s; check pass {res['check_s']:.1f} s; warm-up {warm} s; runs {runs} s")
     executed = res["warm"] + res["runs"]
     timed_fail = {op["name"] for r in executed for op in r["ops"] if op["failed"]}
     attempted = len(res["ops"]) * (1 + len(executed))
@@ -346,8 +338,7 @@ def main():
               + ("no previous run" if prev is None else ", ".join(prev) or "none"))
     else:
         metrics, info = end_to_end(res)
-        print(f"runs {info['runs']}, per-operation samples {info['op_samples']}, "
-              f"cold set-up samples {len(res['setups_s'])}")
+        print(f"runs {info['runs']}, operations {info['ops']}")
     print(f"failed_ops {failed}/{attempted}")
     for name, (value, unit) in metrics.items():
         print(f"{name} {value:.6g} {unit}")

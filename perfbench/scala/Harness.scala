@@ -2,6 +2,7 @@ package perfbench
 
 import java.lang.management.ManagementFactory
 import java.nio.file.{Files, Paths}
+import java.util.SplittableRandom
 
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
@@ -25,10 +26,6 @@ final case class Op(name: String, frame: (SparkSession, String) => DataFrame, da
   * noop sink, and writes what it measured as JSON.
   *
   *   Harness <workload> <dataDir> <workDir> <seed> <seconds> <trace 0|1> <cpus> <warm-up runs>
-  *
-  * With `setup/<workload>` as the workload it only sets up, writes the
-  * set-up time to `workDir/setup.json` and exits: one more cold set-up
-  * sample.
   *
   * `workDir/workloads.tsv` lists `name<TAB>workload` for the two
   * registry workloads; every registry name must be listed exactly once.
@@ -73,9 +70,7 @@ object Harness {
   }
 
   def main(args: Array[String]): Unit = {
-    val Array(mode, dataDir, work, seedArg, secondsArg, traceArg, cpus, warmArg) = args
-    val setupOnly = mode.startsWith("setup/")
-    val workload = mode.stripPrefix("setup/")
+    val Array(workload, dataDir, work, seedArg, secondsArg, traceArg, cpus, warmArg) = args
     val seed = seedArg.toLong
     val budget = secondsArg.toDouble
     val traced = traceArg == "1"
@@ -98,7 +93,10 @@ object Harness {
         val picked =
           if (!Files.exists(sel)) rows(w)
           else rows(w).filter(Files.readAllLines(sel).asScala.toSet)
-        new Random(seed).shuffle(picked).map(n => Op(n, SparkEntry.queries(n)))
+        // java.util.Random's first draws barely differ for nearby seeds;
+        // SplittableRandom mixes the seed first
+        new Random(new SplittableRandom(seed).nextLong()).shuffle(picked)
+          .map(n => Op(n, SparkEntry.queries(n)))
       case w => System.err.println(s"[perfbench] unknown workload $w"); sys.exit(2)
     }
     val inputs = if (workload == "etl_dag") Seq("events", "customer") else Tables
@@ -120,12 +118,6 @@ object Harness {
     val resolveMs = (System.nanoTime() - tr) / 1e6
     ViewingData.table(spark, dataDir, "events").limit(1).collect()
     val setupS = (nowUs - jvmStartUs) / 1e6
-    if (setupOnly) {
-      Files.writeString(Paths.get(s"$work/setup.json"),
-        Json(Map("setup_s" -> setupS, "resolve_ms" -> resolveMs)))
-      spark.stop()
-      return
-    }
     val sc = spark.sparkContext
     val tracer = if (traced) {
       val t = new Tracer(sc)

@@ -80,17 +80,24 @@ class InputTest(unittest.TestCase):
 
 
 class QuantileTest(unittest.TestCase):
-    def test_p90_stays_within_the_sample(self):
-        def p90(walls):
-            res = {"runs": [{"traced": False, "run_s": sum(walls),
-                             "ops": [{"wall_s": w} for w in walls]}],
-                   "setups_s": [1.0], "peak_rss_mb": 1.0}
-            return run.end_to_end(res)[0]["query_p90_s"][0]
+    @staticmethod
+    def quantiles(*runs):
+        res = {"runs": [{"traced": False, "run_s": sum(walls),
+                         "ops": [{"wall_s": w} for w in walls]} for walls in runs],
+               "setup_s": 1.0, "peak_rss_mb": 1.0}
+        m = run.end_to_end(res)[0]
+        return m["query_p50_s"][0], m["query_p90_s"][0]
 
+    def test_p90_stays_within_the_sample(self):
         walls = [0.3, 0.4, 1.0, 1.2, 2.0, 3.0]
-        self.assertLessEqual(p90(walls), max(walls))
+        self.assertLessEqual(self.quantiles(walls)[1], max(walls))
         # a faster second-slowest operation never raises the p90
-        self.assertLess(p90([0.3, 0.4, 1.0, 1.2, 1.5, 3.0]), p90(walls))
+        self.assertLess(self.quantiles([0.3, 0.4, 1.0, 1.2, 1.5, 3.0])[1],
+                        self.quantiles(walls)[1])
+
+    def test_independent_of_the_number_of_runs(self):
+        walls = [0.3, 0.4, 1.0, 1.2, 2.0, 3.0]
+        self.assertEqual(self.quantiles(walls), self.quantiles(walls, walls))
 
 
 class DigestTest(unittest.TestCase):
